@@ -375,66 +375,32 @@ def main():
     # pays one-time costs that are not query work — JVM JIT + whole-stage
     # codegen compilation, parquet footer reads, and Python-worker process
     # spawn for pandas_udf stages (workers are reused afterwards).  The timed
-    # pass below measures steady-state engine throughput.
+    # pass below measures steady-state engine throughput.  Each query runs
+    # in its own `owned()` scope, so nothing it persisted or checkpointed
+    # survives into the timed pass (the CacheManager would otherwise serve
+    # an equal plan from the warm-up's blocks).
     for name in (HEADLINE + CORPUS + HYGIENE + EXTENDED + CURATION
                  + ANALYTICS + TPCH_REST + MINING + DIAGNOSTICS + ROUND5
                  + ROUND5B):
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        with td.owned():
+            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    # Queries whose distributed work happens at CONSTRUCTION time (iterative
-    # operators: connected-components rounds run eagerly while building the
-    # frame).  These time construction+execution; everything else times
-    # execution only — plan assembly/analysis is driver-side Python (0.2-0.9s
-    # for the wide plans) and would swamp sub-second engine timings, breaking
+    # Queries registered with eager=True do their distributed work at
+    # CONSTRUCTION time (iterative rounds, driver-side collects), so they
+    # time construction+execution; everything else times execution only —
+    # plan assembly/analysis is driver-side Python (0.2-0.9s for the wide
+    # plans) and would swamp sub-second engine timings, breaking
     # round-over-round comparability of the frozen headline list.
-    EAGER = {"semantic_dedup_keep", "kmeans_clusters_emb",
-             "triangle_count_emb", "connected_components_star_docs",
-             "pagerank_event_transitions",
-             # driver-side bitset build / budget scalar are part of the work
-             "bloom_decontaminate_docs", "token_budget_select_docs",
-             "dedup_keep_best_docs", "incremental_near_dup_docs",
-             # bloom bitset built driver-side at construction
-             "bloom_join_orders",
-             # power-iteration rounds run eagerly while building the frame
-             "pca_power_emb",
-             # IRLS rounds run eagerly while building the frame
-             "logistic_quality_docs",
-             # single-agg collect + driver unpivot at construction
-             "profile_orders",
-             # per-rung escalation decided at construction
-             "k_anonymize_events",
-             # N-collect + persisted degree table at construction
-             "pagerank_orders",
-             # IRLS rounds run eagerly while building the frame
-             "calibration_logistic_docs",
-             # skew probe (count pass + 1-row collect) at construction
-             "auto_salted_revenue_events",
-             # peel rounds (or driver fast path) run at construction
-             "kcore_orders",
-             # r11: the graph-iteration driver fast path moved the
-             # edge-count gate + recursion of these two INTO construction
-             # (they were lazy before), so execution-only timing would
-             # no longer measure the work — EAGER keeps the whole
-             # computation inside the timed region (additive; their r10
-             # numbers timed execution only and are kept in
-             # OPTIMIZATION_r11.md for comparison)
-             "ppr_suppliers", "hits_customer_supplier",
-             # two side counts at construction
-             "embedding_drift_emb",
-             # transition collect + driver recursion at construction
-             "markov_attribution_events"}
-
     def timed(names: list[str]) -> dict[str, float]:
         out: dict[str, float] = {}
         for name in names:
-            if name in EAGER:
+            with td.owned():
                 t0 = time.perf_counter()
-                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            else:
                 df = qs[name](spark, sf_dir)
-                t0 = time.perf_counter()
+                if name not in registry.EAGER:
+                    t0 = time.perf_counter()
                 df.write.format("noop").mode("overwrite").save()
-            out[name] = round(time.perf_counter() - t0, 3)
+                out[name] = round(time.perf_counter() - t0, 3)
         return out
 
     timings = timed(HEADLINE)

@@ -16,7 +16,7 @@ from .io import (
     S3Destination, S3Source, SourcePlugin, TableInput, TableOutput,
 )
 from .pubsub import PubSubEngine, publisher, subscriber, transformer
-from .session import get_spark
+from .session import get_spark, owned
 from .store import TableStore, TableURI
 from .tableframe import (
     UDF, Boolean, Categorical, Column, Date, Datetime, Decimal, Duration,
@@ -28,7 +28,7 @@ from .tableframe import (
 __version__ = "0.1.0"
 
 __all__ = [
-    "get_spark", "TableFrame", "TableFrameGroupBy", "Expr", "col", "lit",
+    "get_spark", "owned", "TableFrame", "TableFrameGroupBy", "Expr", "col", "lit",
     "when", "concat", "concat_str", "Column", "UDF", "UDFList", "UDFUnpacked", "selectors",
     "Boolean", "Date", "Datetime", "Decimal", "Duration", "Float32",
     "Float64", "Int8", "Int16", "Int32", "Int64", "Int128", "Null", "String",

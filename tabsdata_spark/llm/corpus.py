@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql.window import Window
 
 from tabsdata_spark.llm.textual import hash_split
+from tabsdata_spark.session import persist
 
 
 def clean_tokens(text: Column) -> Column:
@@ -480,12 +481,12 @@ def bigram_lm_score(docs: DataFrame, id_col: str = "doc_id",
     # subtree per consumer (AQE stage reuse does not fire across these
     # branches — measured 3x the doc_bi cost at sf0.1, and persisting cut
     # the query 2.57s -> 1.72-1.97s interleaved with identical values).
-    # Lazy within-invocation persist: materialized inside the caller's
-    # first action, reclaimed by the ContextCleaner once the returned
-    # frame is dropped (guide §5 — reuse beats recompute when the reused
-    # stage is the expensive one).  At scale this trades one spill-backed
-    # cache of the (doc, bigram) counts for two full re-tokenizations.
-    train_bi = train_bi.persist()
+    # Lazy persist: materialized inside the caller's first action and
+    # released by the caller's `owned()` scope (guide §5 — reuse beats
+    # recompute when the reused stage is the expensive one).  At scale this
+    # trades one spill-backed cache of the (doc, bigram) counts for two
+    # full re-tokenizations.
+    train_bi = persist(train_bi)
     if train_docs is None:
         doc_bi = train_bi
     c2 = (train_bi.groupBy("bigram").agg(F.sum("tf").alias("c2"))

@@ -27,6 +27,7 @@ import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.window import Window
 
+from ..session import checkpoint, persist
 from .textual import tokens, word_ngrams
 
 
@@ -188,8 +189,8 @@ def minhash_lsh_candidates(
     """
     # persist: the exploded signature table is read from both join sides;
     # at cluster scale this would be a checkpoint to parquet instead
-    exploded = band_signature_rows(
-        df, id_col, text_col, num_hashes, bands, shingle_size).persist()
+    exploded = persist(band_signature_rows(
+        df, id_col, text_col, num_hashes, bands, shingle_size))
     # Cap bucket size with a count-over-window: ONE shuffle on (band, bsig)
     # that also co-locates rows for the self-join below, vs the former
     # groupBy + join-back (two shuffles + a join).
@@ -539,7 +540,7 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     sym = (edges.select(u, v)
            .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
            .distinct())
-    sym = sym.localCheckpoint(eager=True)
+    sym = checkpoint(sym)
     n_edges = sym.count()
     small = SMALL_GRAPH_EDGES if small_graph_threshold is None \
         else small_graph_threshold
@@ -549,7 +550,7 @@ def connected_components(edges: DataFrame, src: str = "id_a",
         labels = (sym.select(F.col("u").alias("node"))
                   .union(sym.select(F.col("v").alias("node"))).distinct()
                   .withColumn("label", F.col("node")))
-        labels = labels.localCheckpoint(eager=True)
+        labels = checkpoint(labels)
         # Labels are per-node non-increasing, so sum(label) strictly
         # decreases until the fixed point: an exact decimal sum is a
         # convergence witness costing one narrow agg — no old-vs-new join,
@@ -577,7 +578,7 @@ def connected_components(edges: DataFrame, src: str = "id_a",
                                   F.least("label",
                                           F.coalesce("p_label", "label"))
                                    .alias("label")))
-            new_labels = new_labels.localCheckpoint(eager=True)
+            new_labels = checkpoint(new_labels)
             cur_sum = new_labels.agg(
                 F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
             labels = new_labels
@@ -608,7 +609,7 @@ def connected_components_star(edges: DataFrame, src: str = "id_a",
     e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
          .filter(F.col("u") != F.col("v"))
          .distinct())
-    e = e.localCheckpoint(eager=True)
+    e = checkpoint(e)
     n_edges = e.count()
     small = SMALL_GRAPH_EDGES if small_graph_threshold is None \
         else small_graph_threshold
@@ -620,9 +621,8 @@ def connected_components_star(edges: DataFrame, src: str = "id_a",
 
 def _star_rounds(e: DataFrame, n_edges: int, max_iter: int,
                  check_every: int) -> DataFrame:
-    nodes = (e.select(F.col("u").alias("node"))
-             .union(e.select(F.col("v").alias("node"))).distinct()
-             .localCheckpoint(eager=True))
+    nodes = checkpoint(e.select(F.col("u").alias("node"))
+                       .union(e.select(F.col("v").alias("node"))).distinct())
 
     def _fingerprint(df: DataFrame):
         # bit_xor, not sum: xor of 64-bit hashes is an order-insensitive
@@ -665,8 +665,8 @@ def _star_rounds(e: DataFrame, n_edges: int, max_iter: int,
         # own groupBy-min back against its input (the input is consumed
         # twice), so an unmaterialized intermediate would recompute the
         # whole prior pass — measured slower than the extra checkpoint
-        e = _large_star(e).localCheckpoint(eager=True)
-        e = _small_star(e).localCheckpoint(eager=True)
+        e = checkpoint(_large_star(e))
+        e = checkpoint(_small_star(e))
         # fingerprint only every `check_every` rounds: the check is its own
         # Spark job, and on converged-early graphs round latency (not data)
         # dominates — worst case trades <=check_every-1 cheap extra rounds
@@ -747,7 +747,7 @@ def triangle_count(edges: DataFrame, src: str = "id_a",
     # sides, closing-edge probe) — materialize once or the upstream
     # candidate-pair join (often an O(n^2/blocks) similarity join) re-runs
     # per consumer
-    e = e.localCheckpoint(eager=True)
+    e = checkpoint(e)
     deg = (e.select(F.col("u").alias("n")).union(e.select(F.col("v").alias("n")))
            .groupBy("n").agg(F.count(F.lit(1)).alias("d")))
     # orient: lower (degree, id) -> higher
@@ -964,16 +964,14 @@ def incremental_near_dup(
     `minhash_lsh_candidates`; the verify join touches candidate pairs
     only.  Ids must be disjoint across the two tables (they share one id
     space by contract, as in any versioned ingest)."""
-    tagged = (
+    # consumed by the LSH pass, the flag projections, and the exact
+    # jaccard verify — lazy persist reads the source once (the
+    # bigram_lm_score lesson)
+    tagged = persist(
         new_batch.select(F.col(id_col), F.col(text_col),
                          F.lit(True).alias("__new"))
         .unionByName(corpus.select(F.col(id_col), F.col(text_col),
-                                   F.lit(False).alias("__new")))
-        # consumed by the LSH pass, the flag projections, and the exact
-        # jaccard verify — lazy within-invocation persist reads the
-        # source once (the bigram_lm_score lesson)
-        .persist()
-    )
+                                   F.lit(False).alias("__new"))))
     cand = minhash_lsh_candidates(tagged, id_col, text_col, **lsh_kwargs)
     flags = tagged.select(F.col(id_col), F.col("__new"))
     sided = (
@@ -988,13 +986,13 @@ def incremental_near_dup(
     # and the final hits join) and is tiny (capped LSH buckets), while
     # its lineage — the full signature + band self-join — is the
     # expensive part: persist so candidate generation runs once.
-    oriented = sided.select(
+    oriented = persist(sided.select(
         F.when(F.col("new_a"), F.col("id_a")).otherwise(F.col("id_b"))
          .alias("doc_id_n"),
         F.when(F.col("new_a"), F.col("id_b")).otherwise(F.col("id_a"))
          .alias("match_id_n"),
         "id_a", "id_b",
-    ).persist()
+    ))
     # pairs lineage here IS the band join (unmaterialized): pruning
     # would re-run candidate generation to save a shingle pass — net loss
     verified = ngram_jaccard_pairs(
@@ -1149,7 +1147,7 @@ def clustering_coefficient(edges: DataFrame, src: str = "id_a",
          .select(F.least("u", "v").alias("u"),
                  F.greatest("u", "v").alias("v"))
          .distinct())
-    e = e.localCheckpoint(eager=True)
+    e = checkpoint(e)
     deg = (e.select(F.col("u").alias("node"))
            .union(e.select(F.col("v").alias("node")))
            .groupBy("node").agg(F.count(F.lit(1)).alias("degree")))

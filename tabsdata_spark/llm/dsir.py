@@ -31,6 +31,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from ..session import persist
 from .corpus import clean_tokens
 
 
@@ -84,13 +85,13 @@ def importance_weights(raw: DataFrame, target: DataFrame,
     # table feeds both its total and the ratio join — without persists the
     # expensive feature subtree re-executes per consumer (AQE stage reuse
     # does not fire across these branches; the bigram_lm_score lesson).
-    # Lazy within-invocation persists: features once, and the two
-    # <= `buckets`-row models once each.
-    raw_feats = _bucketed_features(raw, id_col, text_col, n, buckets).persist()
-    t_counts = (bucket_distribution(target, id_col, text_col, n, buckets)
-                .persist())
-    r_counts = (raw_feats.groupBy("bucket")
-                .agg(F.count(F.lit(1)).alias("cnt")).persist())
+    # Lazy persists: features once, and the two <= `buckets`-row models
+    # once each.
+    raw_feats = persist(_bucketed_features(raw, id_col, text_col, n, buckets))
+    t_counts = persist(bucket_distribution(target, id_col, text_col, n,
+                                           buckets))
+    r_counts = persist(raw_feats.groupBy("bucket")
+                       .agg(F.count(F.lit(1)).alias("cnt")))
     t_total = t_counts.agg(F.sum("cnt").alias("t_total"))
     r_total = r_counts.agg(F.sum("cnt").alias("r_total"))
     # log-ratio per bucket; buckets unseen in either model fall back to the

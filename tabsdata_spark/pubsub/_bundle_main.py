@@ -59,6 +59,7 @@ def main(argv: list[str] | None = None) -> int:
     try:
         from pyspark.sql import SparkSession
 
+        from tabsdata_spark.session import owned
         from tabsdata_spark.tableframe.frame import TableFrame
 
         # load the bundle BEFORE paying JVM startup: a broken bundle or a
@@ -83,19 +84,22 @@ def main(argv: list[str] | None = None) -> int:
                 df = d if df is None else df.unionByName(
                     d, allowMissingColumns=True)
             frames.append(TableFrame._from_df(df))
-        result = fn(*frames)
-        outputs = (list(result) if isinstance(result, (list, tuple))
-                   else [] if result is None else [result])
         import os
 
-        for i, out in enumerate(outputs):
-            if out is None:
-                resp["outputs"].append(None)
-                continue
-            df = out.df if isinstance(out, TableFrame) else out
-            path = os.path.join(out_dir, f"out_{i}")
-            df.write.mode("errorifexists").parquet(path)
-            resp["outputs"].append(path)
+        # one scope for the run: intermediates the function persisted or
+        # checkpointed are released once its outputs are written
+        with owned():
+            result = fn(*frames)
+            outputs = (list(result) if isinstance(result, (list, tuple))
+                       else [] if result is None else [result])
+            for i, out in enumerate(outputs):
+                if out is None:
+                    resp["outputs"].append(None)
+                    continue
+                df = out.df if isinstance(out, TableFrame) else out
+                path = os.path.join(out_dir, f"out_{i}")
+                df.write.mode("errorifexists").parquet(path)
+                resp["outputs"].append(path)
     except Exception as e:  # noqa: BLE001 - report to the control plane
         resp["error"] = f"{type(e).__name__}: {e}\n{traceback.format_exc(limit=10)}"
     with open(f"{out_dir}/response.json", "w") as f:

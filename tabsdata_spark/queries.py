@@ -28,11 +28,19 @@ _QUERIES: dict[str, Query] = {}
 _ORACLES: dict[str, str] = {}
 
 
-def q(name: str, sql: str | None = None):
+#: Queries whose distributed work runs while the frame is BUILT (iterative
+#: rounds, driver-side collects): bench.py times construction + execution
+#: for these, execution only for the rest.
+EAGER: set[str] = set()
+
+
+def q(name: str, sql: str | None = None, eager: bool = False):
     def deco(fn: Query) -> Query:
         _QUERIES[name] = fn
         if sql is not None:
             _ORACLES[name] = sql
+        if eager:
+            EAGER.add(name)
         return fn
 
     return deco
@@ -1277,159 +1285,6 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return docs.select("doc_id", "lang",
                        textual.language_id(F.col("text")).alias("lang_pred"))
-
-
-# Round-3 registry rotation: the driver's correctness snapshot covers the
-# FIRST 50 entries of queries() in dict order.  Rounds 1-2 verified the same
-# 50 (registration order); those stay enforced by tests/test_vanilla_session
-# and tools/check_queries.py.  This window re-runs cast_ops (hash fix) plus
-# 49 queries that have never had a driver row.  Round 4 rotates the final
-# ~49 in.  Rotation map recorded in NOTES.md.
-#: Round-4 driver window (the driver snapshots the FIRST 50 entries of
-#: queries() in dict order).  Rotation plan across rounds: r1+r2 verified
-#: registration-order[0:50] (CORRECTNESS_r02 keys); r3 verified cast_ops +
-#: 49 never-checked (_PRIORITY_R3, see git history); r4 = the two r3 reds
-#: re-checked after their HUGEINT-oracle fix + 48 more never-checked; the
-#: remaining pool rotates in at r5/r6.  All window changes are pure
-#: reorders — every registered query stays green under
-#: tools/check_queries.py --vanilla at all three scales.
-#: Round-5 driver window — exactly the 50-name list pre-staged in NOTES.md
-#: at the end of round 4.  All 50 are never-driver-verified but three-scale
-#: vanilla --exact green; bigram_lm_docs + growth_curve_events confirm the
-#: last two HUGEINT oracle fixes, and stream_anomaly_events +
-#: stream_near_dup_events give the LIVE streaming path its first hard
-#: driver signal.  Round 6 rotates in the final 37 (+ any new
-#: registrations) and finishes the registry.
-_PRIORITY_R5 = [
-    "approx_quantile_invariant", "asof_nearest_events", "segment_dedup_docs",
-    "video_frames_decode", "bigram_lm_docs", "bloom_decontaminate_docs",
-    "normalize_text_docs", "dedup_keep_best_docs", "token_budget_select_docs",
-    "embed_pq_topk", "zorder_events", "incremental_near_dup_docs",
-    "heavy_hitters_tokens", "hll_union_invariant", "feature_hash_docs",
-    "sparse_cosine_docs", "funnel_events", "drift_psi_events",
-    "retention_cohorts_events", "collocations_docs", "mad_outliers_events",
-    "dedup_window_events", "edit_distance_pairs_docs", "audio_features_decode",
-    "containment_pairs_docs", "hard_negatives_emb", "char_entropy_docs",
-    "weighted_sample_docs", "bpe_encode_docs", "readability_docs",
-    "js_divergence_sources", "bloom_join_orders", "rolling_zscore_events",
-    "regr_trend_events", "rrf_fuse_docs", "semantic_decontam_emb",
-    "padding_waste_docs", "ab_test_events", "mi_lang_source_docs",
-    "mmr_rerank_emb", "cooccurrence_events", "resample_ffill_events",
-    "winsorize_events", "benford_prices", "markov_events",
-    "session_paths_events", "growth_curve_events", "stream_anomaly_events",
-    "stream_near_dup_events", "vocab_coverage_docs",
-]
-
-#: Round-6 driver window — exactly the 50-name list pre-staged in NOTES.md
-#: at the end of round 5 (the 37 r4-era leftovers + the 13 r5 additions).
-#: All 50 are never-driver-verified but three-scale vanilla --exact green.
-#: Includes 7 live streaming operators, the persisted-LSH incremental path
-#: (incremental_near_dup_indexed_docs), and the heavy pca_power_emb /
-#: pagerank_orders.  Round 7 rotates in the staged 50-name r7 window
-#: (NOTES.md), round 8 the residual pool — finishing driver coverage of
-#: the frozen 357-query registry.
-_PRIORITY_R6 = [
-    "acf_events", "attribution_events", "changepoint_events",
-    "chi2_token_lang_docs", "chi_squared_events", "cluster_quality_emb",
-    "clustering_coeff_emb", "concurrency_events",
-    "cross_source_dup_matrix_docs", "disorder_events",
-    "dup_size_histogram_docs", "ewma_events", "gini_customers",
-    "heldout_lm_docs", "hourly_load_events",
-    "incremental_near_dup_indexed_docs", "incremental_rollup_orders",
-    "int8_quantize_emb", "k_anonymity_events", "k_anonymize_events",
-    "kaplan_meier_orders", "key_skew_orders", "label_centroid_cosine_emb",
-    "lang_confusion_docs", "logistic_quality_docs", "mann_whitney_events",
-    "ngram_novelty_docs", "ols_multi_events", "pagerank_orders",
-    "pca_power_emb", "pii_density_docs", "profile_orders",
-    "record_linkage_customers", "rfm_customers", "scd2_customers",
-    "seasonal_anomalies_events", "seasonality_events", "shard_assign_docs",
-    "ship_latency_orders", "stratified_split_docs", "stream_drift_events",
-    "stream_hourly_events", "stream_ingest_dedup_docs",
-    "stream_interval_join_events", "stream_k_anonymize_events",
-    "stream_session_events", "stream_sliding_events",
-    "temperature_sample_docs", "time_to_convert_events", "wau_events",
-]
-
-#: Round-7 driver window — the 50-name list pre-staged in NOTES.md at the
-#: end of round 5/6, with ONE substitution directed by the r6 verdict:
-#: stream_drift_events (the sole r6 red — oracle tz artifact, fixed by
-#: CAST(to_timestamp(...) AS TIMESTAMP)) takes the first slot for its
-#: re-check, and ppr_suppliers (bit-exact in the judge's own r6 vanilla
-#: sample) rotates to the r8 pool.  The driver snapshots queries()[0:50],
-#: so the window must hold exactly 50 names.  49 are never-driver-verified;
-#: all three-scale vanilla --exact green under the stricter tz-aware dtype
-#: guard added to tools/check_queries.py this round.
-_PRIORITY_R7 = [
-    "stream_drift_events",
-    "stream_topk_events", "quantile_normalize_events",
-    "pii_pattern_counts_docs", "embedding_norm_stats_emb",
-    "distinctive_terms_sources", "image_ahash_pairs",
-    "calibration_logistic_docs", "strip_markup_docs",
-    "audio_fingerprint_wav", "activity_islands_events", "cohort_ltv_events",
-    "funnel_stepwise_events", "auto_salted_revenue_events",
-    "cuped_adjusted_events", "linear_attribution_events",
-    "poisson_bootstrap_events", "dp_noisy_counts_events", "cms_tokens_docs",
-    "holt_linear_events", "nelson_aalen_orders", "theil_sen_events",
-    "skew_kurtosis_events", "did_revenue_events", "ipw_value_events",
-    "position_attribution_events", "hits_customer_supplier",
-    "random_projection_emb", "stream_ewma_events", "fd_violations_orders",
-    "ndcg_label_emb", "minhash_calibration_docs", "holt_winters_events",
-    "image_patches_bmp", "xcorr_events", "l_diversity_events",
-    "prefix_dim_quality_emb", "auc_doclen_en", "pr_curve_docs",
-    "kappa_langid_docs", "deterministic_shuffle_docs",
-    "time_decay_attribution_events", "abc_customers", "burstiness_events",
-    "bloom_fpr_docs", "logrank_orders", "script_ratio_docs",
-    "bytes_per_token_docs", "reciprocal_nn_emb", "dp_noisy_revenue_events",
-]
-
-
-#: Round-9 driver window (kept for the r9 guard test and NOTES lineage):
-#: the final 11 never-driver-verified queries plus 39 re-checks of the
-#: oldest (r01-era) driver greens.  After r9 the never-verified pool is
-#: ZERO and the frozen 357 registry is fully driver-covered.
-_PRIORITY_R9 = [
-    "sequential_obf_events", "shard_rebalance_docs", "skyline_orders",
-    "spearman_daily_events", "t_closeness_events", "tenure_hazard_events",
-    "theil_u_docs", "trend_test_events", "two_proportion_events",
-    "weighted_median_lineitem", "wilson_ci_events",
-    "agg_stats", "concat_diagonal", "concat_vertical", "datetime_funcs",
-    "dedup_exact_groups", "dq_checks", "drop_nulls_q", "embed_near_dup",
-    "embed_topk", "expr_math", "expr_predicates", "head_tail",
-    "is_unique_flag", "join_anti", "join_cross", "join_full", "join_inner",
-    "join_left", "join_right", "join_semi", "lang_id", "ngram_jaccard",
-    "null_handling", "q10_returned_items", "q3_shipping_priority",
-    "q5_local_supplier", "q6_forecast_revenue", "rank_window",
-    "segment_revenue", "selectors_numeric", "sort_slice", "string_funcs",
-    "string_regex", "text_fingerprint", "text_quality", "text_tokens",
-    "unique_rows", "unnest_struct", "when_then",
-]
-
-
-#: Round-10 driver window — exactly the 50-name list pre-staged in
-#: NOTES.md at the end of round 9: the rolling re-verification frontier
-#: advances to the 50 OLDEST r2–r5-era greens (ordered by first-green
-#: round, then name) that were not re-checked in the r9 window.  Every
-#: registry row is already driver-green; this window keeps the oldest
-#: evidence current under the strict dtype-aware harness.
-_PRIORITY_R10 = [
-    "dedup_minhash_pairs", "dedup_simhash_pairs", "diff_lag",
-    "embed_lsh_topk", "embed_topk_numpy", "events_hourly", "grok_extract",
-    "json_extract",
-    "asof_join_events", "bm25_docs", "cast_ops", "connected_components_docs",
-    "connected_components_star_docs", "cube_rollup", "decontaminate_docs",
-    "doc_chunks", "dsir_select_docs", "gopher_rules_docs",
-    "grouping_sets_revenue", "hash_split_docs", "incremental_dedup_docs",
-    "kmeans_clusters_emb", "median_by_group", "mixture_sample_docs",
-    "ntile_customers", "pack_sequences", "pagerank_event_transitions",
-    "percentiles_events", "pii_redact", "pivot_lang_counts",
-    "q11_important_parts", "q13_customer_distribution", "q14_promo_revenue",
-    "q15_top_supplier", "q16_supplier_cnt", "q17_small_quantity",
-    "q18_large_volume", "q19_disjunctive", "q20_excess_shippers",
-    "q21_waiting_suppliers", "q22_idle_customers", "q2_min_cost_supplier",
-    "q4_order_priority", "q7_volume_shipping", "q8_market_share",
-    "q9_product_profit", "range_join_events", "repeated_spans_docs",
-    "semantic_dedup_keep", "session_window_native",
-]
 
 
 #: Round-11 driver window — per the r10 verdict ("stage the r11 driver
@@ -3325,6 +3180,8 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT node AS doc_id, MIN(label) AS component
     FROM walk GROUP BY node
     """,
+    # iterative rounds run eagerly while building the frame
+    eager=True,
 )
 def connected_components_star_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components via large-star/small-star contraction
@@ -3940,6 +3797,8 @@ def histogram_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
            ON m.node = r.node)
     SELECT node, ROUND(rank, 6) AS rank FROM r3
     """,
+    # iterative rounds run eagerly while building the frame
+    eager=True,
 )
 def pagerank_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the event-type transition graph (edges = consecutive
@@ -4153,6 +4012,8 @@ def quality_gate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT vec_id, label FROM embeddings
     WHERE vec_id NOT IN (SELECT node FROM comp WHERE component < node)
     """,
+    # iterative rounds run eagerly while building the frame
+    eager=True,
 )
 def semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup: cosine >= 0.3 pairs (label-blocked)
@@ -4405,6 +4266,8 @@ def incremental_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT node, COUNT(*) AS triangles FROM nodes GROUP BY node
     """,
+    # iterative rounds run eagerly while building the frame
+    eager=True,
 )
 def triangle_count_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle counts of the cosine>=0.2 similarity graph
@@ -4529,7 +4392,8 @@ _KMEANS_ORACLE = """
 """
 
 
-@q("kmeans_clusters_emb", _KMEANS_ORACLE)
+# iterative rounds run eagerly while building the frame
+@q("kmeans_clusters_emb", _KMEANS_ORACLE, eager=True)
 def kmeans_clusters_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed Lloyd k-means (k=8, 2 iterations, deterministic seed =
     8 smallest ids).  Per iteration: broadcast centroid model out, narrow
@@ -5023,6 +4887,8 @@ _BLOOM_POS_SQL = """list_reduce(
     SELECT doc_id, COUNT(*) AS n_bloom_hits
     FROM hits GROUP BY doc_id
     """,
+    # driver-side bitset build / budget scalar are part of the work
+    eager=True,
 )
 def bloom_decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter decontamination (llm/decontam.py bloom_contamination):
@@ -5102,6 +4968,8 @@ def normalize_text_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE d.doc_id NOT IN (SELECT node FROM comp)
        OR d.doc_id IN (SELECT keep_id FROM best)
     """,
+    # driver-side bitset build / budget scalar are part of the work
+    eager=True,
 )
 def dedup_keep_best_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-best near-dup removal (llm/dedup.py dedup_keep_best): within
@@ -5159,6 +5027,8 @@ def dedup_keep_best_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM binned CROSS JOIN cutoff
     WHERE qbin >= cut
     """,
+    # driver-side bitset build / budget scalar are part of the work
+    eager=True,
 )
 def token_budget_select_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget corpus selection (llm/corpus.py token_budget_select):
@@ -5276,6 +5146,8 @@ def zorder_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     QUALIFY ROW_NUMBER() OVER (PARTITION BY doc_id
             ORDER BY jaccard DESC, match_id ASC) = 1
     """,
+    # driver-side bitset build / budget scalar are part of the work
+    eager=True,
 )
 def incremental_near_dup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental-ingest NEAR dedup (llm/dedup.py incremental_near_dup):
@@ -6004,6 +5876,8 @@ def js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE c.c_acctbal > 9000
     GROUP BY c.c_custkey
     """,
+    # bloom bitset built driver-side at construction
+    eager=True,
 )
 def bloom_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Runtime-filter join: the small side (high-balance customers) turns
@@ -7804,6 +7678,8 @@ def stream_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM base, v4)
     SELECT vec_id, ROUND(proj, 6) AS projection FROM p
     """,
+    # power-iteration rounds run eagerly while building the frame
+    eager=True,
 )
 def pca_power_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top principal direction by 3-round power iteration + per-vector
@@ -7927,6 +7803,8 @@ def pca_power_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM base, b3)
     SELECT doc_id, lang, ROUND(p, 6) AS score FROM p
     """,
+    # IRLS rounds run eagerly while building the frame
+    eager=True,
 )
 def logistic_quality_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In-pipeline quality classifier (stats.logistic_two_features):
@@ -8203,6 +8081,8 @@ def acf_events(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(DISTINCT o_orderpriority), NULL, NULL
     FROM orders
     """,
+    # single-agg collect + driver unpivot at construction
+    eager=True,
 )
 def profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass table profiling report (scale.profile_table): per column —
@@ -8690,6 +8570,8 @@ def stream_sliding_events(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(n AS BIGINT) AS n
     FROM allv, pick WHERE level = lvl
     """,
+    # per-rung escalation decided at construction
+    eager=True,
 )
 def k_anonymize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Generalization-ladder k-anonymization (llm/textual.py
@@ -8884,6 +8766,8 @@ def stream_k_anonymize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
            FROM deg d JOIN s3 s ON d.u = s.node, nn)
     SELECT node, ROUND(pr, 6) AS pagerank FROM p3
     """,
+    # N-collect + persisted degree table at construction
+    eager=True,
 )
 def pagerank_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank centrality (graph.pagerank_exact) over the
@@ -9638,6 +9522,8 @@ def image_ahash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q(
     "calibration_logistic_docs",
     None,  # oracle assembled below from the logistic oracle CTE
+    # IRLS rounds run eagerly while building the frame
+    eager=True,
 )
 def calibration_logistic_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability diagram of the IRLS quality classifier
@@ -9932,6 +9818,8 @@ def funnel_stepwise_events(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS revenue
     FROM events GROUP BY event_type
     """,
+    # skew probe (count pass + 1-row collect) at construction
+    eager=True,
 )
 def auto_salted_revenue_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-adaptive aggregation (scale.auto_salted_agg): probe the key
@@ -10683,6 +10571,8 @@ def position_attribution_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT node, 'authority' AS role, ROUND(a, 9) AS score FROM a2
     """,
+    # the graph-iteration driver fast path runs the edge-count gate + recursion at construction
+    eager=True,
 )
 def hits_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs and authorities (graph.hits_exact, 2 iterations) over
@@ -11874,6 +11764,8 @@ def dp_noisy_revenue_events(spark: SparkSession, sf_dir: str) -> DataFrame:
            FROM deg d LEFT JOIN s2 s ON d.u = s.node)
     SELECT node, ROUND(pr, 9) AS ppr FROM p2
     """,
+    # the graph-iteration driver fast path runs the edge-count gate + recursion at construction
+    eager=True,
 )
 def ppr_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank (graph.ppr_exact, 2 iterations) with the
@@ -13089,6 +12981,8 @@ def growth_accounting_events(spark: SparkSession,
            END AS centroid_norm_ratio
     FROM m, na, nb
     """,
+    # two side counts at construction
+    eager=True,
 )
 def embedding_drift_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Centroid drift between even- and odd-id embedding slices
@@ -13774,6 +13668,8 @@ def code_switch_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT a AS node, CAST(COUNT(*) AS BIGINT) AS degree
     FROM e4 GROUP BY a
     """,
+    # peel rounds (or driver fast path) run at construction
+    eager=True,
 )
 def kcore_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4-round 12-core peeling of the customer-supplier graph over a
@@ -14959,7 +14855,8 @@ def _markov_attr_oracle(steps: int = 12,
     return "".join(parts)
 
 
-@q("markov_attribution_events", _markov_attr_oracle())
+# transition collect + driver recursion at construction
+@q("markov_attribution_events", _markov_attr_oracle(), eager=True)
 def markov_attribution_events(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     """Markov removal-effect attribution (graph.markov_attribution):

@@ -9,15 +9,28 @@ program: generation stays SEQUENTIAL on the seeded rng (bit-identical
 program streams), only execution is concurrent.  Each program must use
 its own DuckDB connection (the module-level default connection is not
 thread-safe).  Exceptions (including assertion failures) propagate to
-the caller on the first failed program.
+the caller on the first failed program, and the programs still queued
+are cancelled.  Each program runs in its own `owned()` scope (a
+contextvar does not flow into pool threads), so whatever it persisted or
+checkpointed is released when it finishes.
 """
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor, as_completed
+
+from tabsdata_spark import owned
 
 
 def run_concurrent(programs, run_one, workers: int = 6) -> None:
+    def owned_run(program):
+        with owned():
+            run_one(program)
+
     with ThreadPoolExecutor(max_workers=workers) as ex:
-        for _ in ex.map(run_one, programs):
-            pass
+        futures = [ex.submit(owned_run, p) for p in programs]
+        try:
+            for fut in as_completed(futures):
+                fut.result()
+        finally:
+            ex.shutdown(cancel_futures=True)

@@ -61,6 +61,13 @@ def vanilla(spark):
         prev._jvm.SparkSession.setActiveSession(prev._jsparkSession)
 
 
+def _cache_state(spark):
+    """(CacheManager entries, persistent RDD ids) of the shared JVM state."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs().keySet()
+    return cm.numCachedEntries(), set(rdds)
+
+
 def test_full_registry_runs_on_vanilla_session(vanilla, sf_dir):
     """Sweep the whole queries() registry: each must build and execute.
     (Value-level oracle checks run in tools/check_queries.py --vanilla;
@@ -71,7 +78,9 @@ def test_full_registry_runs_on_vanilla_session(vanilla, sf_dir):
     thread to one JVM thread, where the initializer re-activates the
     vanilla session so per-thread ANSI detection sees the same session
     the driver's single-threaded process would).  Same queries, same
-    assertion — this only overlaps the waiting."""
+    assertion — this only overlaps the waiting.  Each query runs in its
+    own `td.owned()` scope, and the sweep must leave no cache entry or
+    persisted RDD behind."""
     from concurrent.futures import ThreadPoolExecutor
 
     from tabsdata_spark.queries import queries
@@ -82,15 +91,55 @@ def test_full_registry_runs_on_vanilla_session(vanilla, sf_dir):
     def run_one(item):
         name, fn = item
         try:
-            fn(vanilla, sf_dir).count()
+            with td.owned():
+                fn(vanilla, sf_dir).count()
             return None
         except Exception as e:  # noqa: BLE001 - collect all, report once
             return f"{name}: {type(e).__name__}: {str(e)[:160]}"
 
+    entries, rdds = _cache_state(vanilla)
     with ThreadPoolExecutor(max_workers=6, initializer=_activate) as ex:
         failures = [f for f in ex.map(run_one, queries().items())
                     if f is not None]
     assert not failures, "vanilla-session failures:\n" + "\n".join(failures)
+    entries_after, rdds_after = _cache_state(vanilla)
+    assert entries_after <= entries
+    assert rdds_after - rdds == set()
+
+
+def test_owned_scope_leaves_no_cache_for_next_call(spark, sf_dir):
+    """Two scoped calls of a query that persists a shared intermediate:
+    the CacheManager is empty after each, and the second call's plan
+    reads no InMemoryRelation the first call materialized (its own lazy
+    persist is planned too, but holds no blocks before the action)."""
+    from tabsdata_spark.queries import queries
+
+    fn = queries()["bigram_lm_docs"]
+    spark.catalog.clearCache()
+    for _ in range(2):
+        with td.owned():
+            df = fn(spark, sf_dir)
+            leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
+            cached = [leaves.apply(i) for i in range(leaves.size())
+                      if leaves.apply(i).nodeName() == "InMemoryRelation"]
+            warm = [r for r in cached
+                    if r.cacheBuilder().isCachedColumnBuffersLoaded()]
+            df.count()
+        assert _cache_state(spark)[0] == 0
+    assert cached and not warm
+
+
+def test_owned_scope_releases_everything_when_body_raises(spark):
+    from tabsdata_spark.session import checkpoint, persist
+
+    before = _cache_state(spark)
+    with pytest.raises(RuntimeError):
+        with td.owned():
+            base = persist(spark.range(100))
+            checkpoint(base.selectExpr("id * 2 AS x")).count()
+            assert _cache_state(spark) != before
+            raise RuntimeError("body failed")
+    assert _cache_state(spark) == before
 
 
 def test_cast_semantics_on_ansi_session(vanilla):
@@ -135,47 +184,6 @@ def _driver_greens(rounds):
     return out
 
 
-def test_driver_window_covers_never_verified_queries():
-    """Guard the r9 rotation lineage: _PRIORITY_R9 must remain the 11
-    never-driver-verified queries (through r8) plus 39 r1-era greens;
-    CORRECTNESS_r09 must show all 50 green (the window that closed the
-    never-verified pool)."""
-    from tabsdata_spark import queries as registry
-
-    window = registry._PRIORITY_R9
-    assert len(window) == 50
-    all_green_r8 = _driver_greens(("01", "02", "03", "04", "05", "06",
-                                   "07", "08"))
-    never = set(window[:11])
-    rechecks = set(window[11:])
-    assert never & all_green_r8 == set(), never & all_green_r8
-    assert rechecks <= _driver_greens(("01",))
-    # r9 verified the whole window green
-    assert set(window) <= _driver_greens(("09",))
-
-
-def test_driver_window_r10_is_oldest_unrechecked_greens():
-    """Guard the r10 rotation lineage: _PRIORITY_R10 must remain the 50
-    oldest r2–r5-era greens (by first-green round, then name) not
-    re-checked in the r9 window; CORRECTNESS_r10 shows all 50 green."""
-    from tabsdata_spark import queries as registry
-
-    window = registry._PRIORITY_R10
-    assert len(window) == 50
-
-    # every window name first went green in rounds 2-5 and was NOT part
-    # of the r9 window (i.e. not already re-checked under the strict
-    # harness)
-    r1 = _driver_greens(("01",))
-    r2_5 = _driver_greens(("02", "03", "04", "05"))
-    for n in window:
-        assert n in r2_5 and n not in r1, n
-        assert n not in registry._PRIORITY_R9, n
-
-    # r10 verified the whole window green
-    assert set(window) <= _driver_greens(("10",))
-
-
 def test_driver_window_r11_leads_with_optimized_queries():
     """The driver snapshots queries()[0:50].  Guard the r11 rotation
     (r10 verdict item 4): the window must lead with the r10/r11-optimized
@@ -197,12 +205,6 @@ def test_driver_window_r11_leads_with_optimized_queries():
                  "cosine_histogram_emb", "semantic_decontam_emb",
                  "bloom_fpr_docs", "q1_pricing_summary", "text_quality"}
     assert optimized <= set(window[:26])
-
-    # the rotation-filler tail never re-checks the freshest (r10-window)
-    # evidence; overlap is allowed only in the optimized lead section,
-    # where re-confirmation is the point (e.g. pagerank_event_transitions
-    # was r10-verified AND r11-touched)
-    assert set(window[26:]) & set(registry._PRIORITY_R10) == set()
 
     # cumulative coverage: every registry query is green in some prior
     # round (the never-verified pool stays zero)

@@ -218,9 +218,10 @@ def main():
             continue
         t0 = _time.monotonic()
         try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            with td.owned():
+                sdf = fn(spark, sf_dir)
+                scols = sdf.columns
+                srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             print(f"FAIL  {name}: spark error: {type(e).__name__} {str(e)[:200]}")
             failed += 1
